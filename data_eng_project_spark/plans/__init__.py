@@ -68,9 +68,9 @@ from data_eng_project_spark.plans import tokenize  # noqa: E402,F401
 #      evidence predates round 8 (the 12 r8 rows that do not fit —
 #      upsert_new_rows .. bpe_roundtrip_report — are the natural r14
 #      window head).
-# Earlier rounds' queries stay covered every session by
-# tests/test_oracle_parity.py (sf0.001) + tools/driver_audit.py --all
-# (strict sf0.01 mirror).
+# Every oracle query stays covered every session by the one strict
+# comparator (tests/oracle_harness.py): tests/test_oracle_parity.py runs
+# it at sf0.001, and tools/driver_audit.py --all at sf0.01.
 _GRADED_WINDOW = [
     # 1. The round-7-latest head (includes this round's search rewrites):
     "crossmodal_dup_consensus",

@@ -742,7 +742,7 @@ def holt_linear_event_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "event_type",
         # DATE output columns are unproven at the driver's hash layer
-        # (tools/driver_audit.risky_fields) — serve the ISO string.
+        # (tests/oracle_harness.risky_fields) — serve the ISO string.
         F.date_format("day", "yyyy-MM-dd").alias("day"),
         F.col("x").cast("bigint").alias("n_events"),
         "level",

@@ -5,11 +5,13 @@ similarity recall, multimodal plumbing."""
 from __future__ import annotations
 
 import math
+from decimal import Decimal
 
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from data_eng_project_spark.functions.dates import parse_date_multi
 from data_eng_project_spark.functions.geo import derive_lat, derive_lon, haversine_km
@@ -27,6 +29,7 @@ from data_eng_project_spark.operators.similarity import (
     lsh_bucketed_pairs,
 )
 from data_eng_project_spark.operators.spatial import near_join
+from tests.oracle_harness import _canon, risky_fields
 
 
 # ---------------------------------------------------------------- scalars
@@ -496,18 +499,44 @@ def test_asof_join_map_payload_executes_and_tie_break(spark):
     assert out3[0]["asof_tag"] == "b"  # last() over tag-ordered window
 
 
-def test_driver_audit_canon_strings_comparable():
-    """ADVICE r4: _canon must tag strings too, so a nullable string
-    column at a sort tie point compares against ('\\x00none', '')
-    instead of raising TypeError and mis-reporting EXCEPTION."""
-    import sys
+def _sorted_canon(rows):
+    return sorted(tuple(_canon(v) for v in r) for r in rows)
 
-    sys.path.insert(0, "/root/repo/tools")
-    from driver_audit import _canon
 
-    rows = [(1, None), (1, "abc"), (1, "abd")]
-    got = sorted(tuple(_canon(v) for v in r) for r in rows)
-    assert got[0][1] == ("\x00none", "")  # NULLs first, no TypeError
+@pytest.mark.parametrize(
+    "got, want",
+    [
+        # NULLs sort first at a tie point instead of raising TypeError
+        # against tagged strings.
+        pytest.param(
+            lambda: _sorted_canon([(1, "abc"), (1, None), (1, "abd")])[0][1],
+            ("\x00none", ""),
+            id="null_string_sort_tie",
+        ),
+        # Decimal scale is part of the value the driver hashes.
+        pytest.param(
+            lambda: _canon(Decimal("1.50")) == _canon(Decimal("1.5")),
+            False,
+            id="decimal_scale_differs",
+        ),
+        pytest.param(
+            lambda: _sorted_canon([([[Decimal("1.50"), None]],)])[0][0],
+            ("arr", (("arr", (("dec", "1.50"), ("\x00none", ""))),)),
+            id="nested_decimal_array",
+        ),
+        pytest.param(
+            lambda: risky_fields(
+                T.StructType([T.StructField("price", T.DecimalType(38, 6))]), [(None,)]
+            ),
+            [("price", "decimal(38,6)", "FATAL")],
+            id="decimal_output_risky",
+        ),
+    ],
+)
+def test_driver_audit_canon_strings_comparable(got, want):
+    """The strict oracle comparator (tests/oracle_harness) keeps apart
+    what the driver's value hash keeps apart, and stays sortable."""
+    assert got() == want
 
 
 def test_asof_join_equals_naive_on_random_data(spark):

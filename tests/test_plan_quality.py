@@ -901,14 +901,17 @@ def test_gemm_block_shuffles_ship_source_floats(spark):
         )
 
 
-def test_bm25_corpus_tokenized_once(spark):
+@pytest.mark.parametrize("name", ["bm25_search", "hybrid_search", "rrf_hybrid_search"])
+def test_bm25_corpus_tokenized_once(spark, name):
     """r12: the corpus-stats aggregate of the BM25 frame must reuse the
     per-doc TF exchange instead of re-tokenizing the corpus. The two
     consumer subtrees are identical only because _bm25_scored_frame
     filters null doc_ids BEFORE tokenizing (the embeddings equi-join in
     hybrid/rrf pushes IsNotNull into one branch otherwise); AQE then
-    dedupes the exchange at runtime — so assert on the EXECUTED plan."""
-    df = REGISTRY["bm25_search"].fn(spark, SF)
+    dedupes the exchange at runtime — so assert on the EXECUTED plan.
+    The hybrid searches also feed one scored frame to two consumers
+    (textdata.py), which their executed plans must reuse too."""
+    df = REGISTRY[name].fn(spark, SF)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ReusedExchange" in plan, (

@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
 """Capture .explain("formatted") output for bench-timed (and named)
-queries — round 13 edition of capture_plans_r12.py.
+queries.
 
 Writes plans/r13/<query>_<label>.txt. Usage:
 

@@ -1,44 +1,19 @@
-"""Driver-faithful correctness audit.
-
-Round-1 forensics (VERDICT.md, CORRECTNESS_r01.json) showed the driver's
-value-hash comparison diverges from ``tests/oracle_harness.py`` exactly on
-output *representation*: every query whose final schema carried a
-``DECIMAL(38,6)`` column failed ``hash_match`` (19/19), and the one
-no-decimal failure (``sessionize_events``) carried sub-second-precision
-timestamps; sibling queries that final-cast to DOUBLE (q14, q17,
-nation_market_share) or emit hour-aligned timestamps (events_hourly_gapfill)
-all passed.  The old harness normalized decimals (``Decimal.normalize()``)
-and fetched DuckDB timestamps pre-truncated, so it could not see any of it.
-
-This tool is the strict local mirror:
-
-1. **Schema risk scan** (no per-row comparison; NB not free — building
-   some DataFrames executes driver-side fits, e.g. the BPE and PCA
-   entries run their distributed fit just to expose a schema): flags
-   any registry query whose
-   final Spark schema contains a type class the round-1 driver did not
-   certify green — DecimalType anywhere, TimestampType/TimestampNTZType
-   (unless every collected value is hour-aligned, which r1 certified via
-   events_hourly_gapfill), and warns on DateType (no r1 query emitted one,
-   so it is unproven either way).
-
-2. **Strict value compare at sf0.01** (the driver's SF): Spark ``collect()``
-   vs DuckDB ``fetchall()``, compared with *scale-sensitive* decimal
-   strings, full-microsecond ISO timestamps, and ``repr`` floats — no
-   normalization of any kind.
+"""Driver-mirror audit at the driver's scale factor (sf0.01): a CLI over
+the strict comparator in ``tests/oracle_harness.py``.
 
 Usage:
-    python tools/driver_audit.py --scan                 # schema risk scan, all oracle queries
+    python tools/driver_audit.py --scan                 # output-type risk scan, all registry queries
     python tools/driver_audit.py [name ...]             # strict compare for named queries
     python tools/driver_audit.py --all                  # strict compare, every oracle query
     python tools/driver_audit.py --window N             # restrict to first N registry entries
+
+The scan compares no rows, but is not free: building some DataFrames
+runs a driver-side fit (the BPE and PCA entries) just to expose a schema.
+Prints PASS/FAIL per query and exits 1 if any query has a problem.
 """
 
 from __future__ import annotations
 
-import datetime as _dt
-import decimal as _dec
-import math
 import os
 import sys
 import time
@@ -54,129 +29,9 @@ if hasattr(time, "tzset"):
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb
-
-from pyspark.sql import types as T
+from tests.oracle_harness import compare, risky_fields  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
-
-SAFE_ATOMS = (
-    T.LongType,
-    T.IntegerType,
-    T.ShortType,
-    T.ByteType,
-    T.DoubleType,
-    T.FloatType,
-    T.StringType,
-    T.BooleanType,
-)
-
-
-def risky_fields(schema: T.StructType) -> list[tuple[str, str, str]]:
-    """Return (column, type, severity) for every non-driver-certified type."""
-    out: list[tuple[str, str, str]] = []
-    for f in schema.fields:
-        dt = f.dataType
-        if isinstance(dt, T.DecimalType):
-            out.append((f.name, dt.simpleString(), "FATAL"))  # 19/19 r1 failures
-        elif isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-            # Hour-aligned passed (gapfill); sub-second failed (sessionize).
-            out.append((f.name, dt.simpleString(), "RISKY"))
-        elif isinstance(dt, T.DateType):
-            out.append((f.name, dt.simpleString(), "WARN"))  # unproven in r1
-        elif not isinstance(dt, SAFE_ATOMS):
-            out.append((f.name, dt.simpleString(), "RISKY"))
-    return out
-
-
-def _canon(v):
-    """Canonical scalar — deliberately scale/representation-sensitive.
-
-    None maps to a tagged tuple (not bare None) so mixed NULL/non-NULL
-    columns stay sortable when earlier sort-key columns tie — sorted()
-    over rows would otherwise raise TypeError comparing None to a
-    tuple, reporting a correct query as EXCEPTION."""
-    if v is None:
-        return ("\x00none", "")
-    if isinstance(v, _dec.Decimal):
-        return ("dec", str(v))  # '4050706.285400' != '4050706.2854'
-    if isinstance(v, float):
-        return ("f", "nan") if math.isnan(v) else ("f", repr(v))
-    if isinstance(v, _dt.datetime):
-        return ("ts", v.replace(tzinfo=None).isoformat(timespec="microseconds"))
-    if isinstance(v, _dt.date):
-        return ("d", v.isoformat())
-    if isinstance(v, bool):
-        return ("b", v)
-    if isinstance(v, int):
-        return ("i", v)
-    if isinstance(v, (list, tuple)):
-        return ("arr", tuple(_canon(x) for x in v))
-    # Strings (and anything else) get a tag too: an untagged str at a sort
-    # tie point is not comparable with the tagged tuples above, so a
-    # nullable string column would raise TypeError and report a correct
-    # query as EXCEPTION (ADVICE r4).
-    return ("s", v if isinstance(v, str) else repr(v))
-
-
-def strict_compare(spark_df, oracle: str, sf_dir: str = SF_DIR) -> list[str]:
-    """Return a list of problems (empty == driver-green by this mirror)."""
-    from data_eng_project_spark.tables import TABLE_NAMES, table_path
-    import os
-
-    problems: list[str] = []
-    risky = risky_fields(spark_df.schema)
-
-    con = duckdb.connect()
-    for name in TABLE_NAMES:
-        p = table_path(sf_dir, name)
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
-    # Round-2 forensics: the six hash_match failures were exactly the six
-    # oracles whose DuckDB result carried a HUGEINT (sum(BIGINT) -> INT128)
-    # column — invisible to fetchall() (plain Python ints) but divergent in
-    # the driver's Arrow/pandas-level hash. Flag any non-BIGINT-width
-    # integer or DECIMAL on the DuckDB side as FATAL.
-    for cname, ctype, *_ in con.execute(f"DESCRIBE ({oracle})").fetchall():
-        if ctype in ("HUGEINT", "UHUGEINT", "UBIGINT") or ctype.startswith(
-            "DECIMAL"
-        ):
-            problems.append(f"FATAL oracle type: {cname} {ctype} (cast to BIGINT/DOUBLE)")
-    cur = con.execute(oracle)
-    o_cols = [d[0] for d in cur.description]
-    o_rows = cur.fetchall()
-    con.close()
-
-    s_cols = spark_df.columns
-    if sorted(s_cols) != sorted(o_cols):
-        problems.append(f"columns differ: {sorted(s_cols)} vs {sorted(o_cols)}")
-        return problems
-    s_rows = [tuple(r) for r in spark_df.collect()]
-    # Value-aware demotion: hour-aligned tz-timestamps were certified green
-    # in r1 (events_hourly_gapfill); only sub-hour-precision values failed.
-    from pyspark.sql import types as _T
-
-    for col, typ, sev in risky:
-        f = spark_df.schema[col]
-        if isinstance(f.dataType, _T.TimestampType):
-            i = s_cols.index(col)
-            vals = [r[i] for r in s_rows if r[i] is not None]
-            if all(
-                v.minute == 0 and v.second == 0 and v.microsecond == 0 for v in vals
-            ):
-                continue
-        problems.append(f"{sev} output type: {col} {typ}")
-    if len(s_rows) != len(o_rows):
-        problems.append(f"row counts differ: spark={len(s_rows)} oracle={len(o_rows)}")
-        return problems
-    s_idx = [s_cols.index(c) for c in sorted(s_cols)]
-    o_idx = [o_cols.index(c) for c in sorted(o_cols)]
-    s_set = sorted(tuple(_canon(r[i]) for i in s_idx) for r in s_rows)
-    o_set = sorted(tuple(_canon(r[i]) for i in o_idx) for r in o_rows)
-    if s_set != o_set:
-        diffs = [(a, b) for a, b in zip(s_set, o_set) if a != b][:3]
-        problems.append(f"strict values differ (cols={sorted(s_cols)}): {diffs}")
-    return problems
 
 
 def main(argv: list[str]) -> int:
@@ -184,7 +39,6 @@ def main(argv: list[str]) -> int:
     from data_eng_project_spark.session import get_session
 
     scan_only = "--scan" in argv
-    run_all = "--all" in argv
     window = None
     if "--window" in argv:
         window = int(argv[argv.index("--window") + 1])
@@ -202,6 +56,7 @@ def main(argv: list[str]) -> int:
         if spec.oracle is None and not scan_only:
             continue
         t0 = time.time()
+        problems = []
         try:
             df = spec.fn(spark, SF_DIR)
             if scan_only:
@@ -210,7 +65,9 @@ def main(argv: list[str]) -> int:
                     n_bad += 1
                     print(f"RISK {name}: {risks}")
                 continue
-            problems = strict_compare(df, spec.oracle)
+            compare(df, SF_DIR, spec.oracle)
+        except AssertionError as e:
+            problems = str(e).splitlines()
         except Exception as e:  # noqa: BLE001
             problems = [f"EXCEPTION: {type(e).__name__}: {e}"]
         dt = time.time() - t0

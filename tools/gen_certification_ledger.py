@@ -64,9 +64,9 @@ def main() -> None:
         f"**{certified} carry a green driver CORRECTNESS row** "
         f"(latest-status green across recorded rounds); {pending} of the "
         "current 50-slot window await first-time grading this round. "
-        "Queries outside the window stay covered every session by "
-        "tests/test_oracle_parity.py (sf0.001) and tools/driver_audit.py "
-        "--all (strict driver mirror at sf0.01).",
+        "Every oracle query stays covered every session by the one strict "
+        "comparator, tests/oracle_harness.py: tests/test_oracle_parity.py "
+        "runs it at sf0.001 and tools/driver_audit.py --all at sf0.01.",
         "",
         "## Round history",
         "",

@@ -1240,7 +1240,7 @@ def hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # projection — and deliberately carries NO materialization (r13,
     # measured): the expensive subtree (tokenize + per-doc TF groupBy +
     # corpus-stats) ends in exchanges AQE dedupes at runtime
-    # (ReusedExchange, pinned by test_bm25_corpus_tokenized_once), so
+    # (ReusedExchange, pinned by test_hybrid_search_corpus_tokenized_once), so
     # the only work the two consumers duplicate is the post-exchange
     # broadcast probe + HOF cosine map stage. Alternated min-of-6 A/B
     # at sf0.1: no-cache 0.955 s ~= localCheckpoint 0.900 s, while

@@ -901,20 +901,28 @@ def test_gemm_block_shuffles_ship_source_floats(spark):
         )
 
 
-@pytest.mark.parametrize("name", ["bm25_search", "hybrid_search", "rrf_hybrid_search"])
-def test_bm25_corpus_tokenized_once(spark, name):
+def _assert_executed_plan_reuses_exchange(spark, name):
+    df = REGISTRY[name].fn(spark, SF)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ReusedExchange" in plan, (
+        f"{name}: corpus-stats branch rebuilt the per-doc TF exchange — "
+        "the corpus is being tokenized twice"
+    )
+
+
+def test_bm25_corpus_tokenized_once(spark):
     """r12: the corpus-stats aggregate of the BM25 frame must reuse the
     per-doc TF exchange instead of re-tokenizing the corpus. The two
     consumer subtrees are identical only because _bm25_scored_frame
     filters null doc_ids BEFORE tokenizing (the embeddings equi-join in
     hybrid/rrf pushes IsNotNull into one branch otherwise); AQE then
-    dedupes the exchange at runtime — so assert on the EXECUTED plan.
-    The hybrid searches also feed one scored frame to two consumers
-    (textdata.py), which their executed plans must reuse too."""
-    df = REGISTRY[name].fn(spark, SF)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "ReusedExchange" in plan, (
-        "corpus-stats branch rebuilt the per-doc TF exchange — "
-        "the corpus is being tokenized twice"
-    )
+    dedupes the exchange at runtime — so assert on the EXECUTED plan."""
+    _assert_executed_plan_reuses_exchange(spark, "bm25_search")
+
+
+@pytest.mark.parametrize("name", ["hybrid_search", "rrf_hybrid_search"])
+def test_hybrid_search_corpus_tokenized_once(spark, name):
+    """The hybrid searches feed one BM25 scored frame to two consumers
+    (textdata.py); their executed plans must reuse the exchange too."""
+    _assert_executed_plan_reuses_exchange(spark, name)

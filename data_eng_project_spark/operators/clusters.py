@@ -3,32 +3,23 @@
 Pairwise near-dup detection (operators/dedup.py) emits edges; the
 deliverable of a dedup stage is the *cluster*: every document labeled
 with its component's canonical (minimum) id, so "keep one per cluster"
-is a single filter. Components are computed with iterative min-label
-propagation — each round, every node takes the minimum label among
-itself and its neighbors; a fixpoint is reached after O(diameter)
-rounds. Near-dup graphs have tiny diameters (dup clusters are near-
-cliques), so this converges in a handful of rounds.
+is a single filter. Components come from min-label propagation: round 1
+is one groupBy over the edge list, and each later round is one join +
+one groupBy plus a pointer jump (adopt the label of your label), so
+chains collapse in O(log diameter) rounds. Convergence is read every
+second round from a 1-row sum of labels (monotone, so an unchanged sum
+certifies the fixpoint); no data rows reach the driver. For adversarial
+billion-edge graphs switch to large-star/small-star (Kiveris et al.,
+"Connected Components in MapReduce and Beyond"): O(log n) rounds on
+any topology.
 
-Scale design: each round is one join + one groupBy (shuffle on node id —
-AQE-coalesced); lineage is cut every round with a *lazy*
-``localCheckpoint`` so the plan doesn't grow unboundedly; convergence is
-detected from a 1-row aggregate (sum of labels, strictly decreasing
-until fixpoint) — no data rows ever reach the driver. Driver-sync
-economy (round-2 verdict item): the checkpoint is eager=False, so the
-convergence aggregate is the ONE action that both materializes the
-round and reads the fixpoint signal, and it only runs every second
-round — min-label propagation is monotone, so a sum unchanged across
-two rounds still certifies the fixpoint, and the worst case is one
-redundant (cheap, already-converged) round. Net: 1 driver round-trip
-per 2 rounds, vs 2 per round for the eager-checkpoint + per-round-
-collect formulation. The first propagation round is fused into label
-initialization (a single groupBy over the edge list), and every
-subsequent round pointer-jumps (path halving), so chains collapse in
-O(log diameter) rounds. This is the DataFrame variant of the classic
-Pregel-style label propagation; for adversarial billion-edge graphs
-you'd switch to the large-star/small-star alternation (Kiveris et al.,
-"Connected Components in MapReduce and Beyond"), which bounds rounds at
-O(log n) on any topology.
+Lineage cuts are not free. On Spark 4.1.2 with AQE on,
+``localCheckpoint(eager=False)`` runs the plan's shuffle and broadcast
+stages when it is called, not at the next action: a two-aggregate join
+ran 3 jobs at the call (0–1 with AQE off), a ``distinct`` 1 (0). The
+per-round cut in connected_components stays (one groupBy per round
+measured 28–30 jobs / 1.9 s against 30 jobs / 1.9 s); pagerank has none
+(OPTIMIZATION_r13.md, Batch E addendum).
 """
 
 from __future__ import annotations
@@ -81,8 +72,8 @@ def connected_components(
             "id",
             F.least(F.col("comp"), F.coalesce("_pcomp", "comp")).alias("comp"),
         )
-        # Lazy lineage cut: the convergence aggregate below is the action
-        # that materializes it (one job, not checkpoint-job + agg-job).
+        # Lineage cut; the call runs this round's shuffle stages (see the
+        # module docstring).
         labels = labels.localCheckpoint(eager=False)
         # Convergence test every 2nd round (and on the last): monotone
         # labels ⇒ sum equal across two rounds still proves the fixpoint;
@@ -121,55 +112,43 @@ def pagerank(
     of a near-dup family, or weight corpus items by graph popularity).
 
     Deterministic and driver-sync-free: exactly ``n_iter`` rounds, no
-    convergence collect (unlike connected_components there is no
-    monotone 1-row fixpoint certificate for PR, so a tolerance test
-    would cost one driver action per round — a fixed iteration budget
-    is the standard scale posture). Each round is one equi-join
-    (ranks ⋈ out-degree-normalized edges) + one groupBy — the classic
-    Pregel matvec as DataFrame algebra; lineage is cut per round with a
-    lazy localCheckpoint so the plan stays bounded.
+    convergence collect (there is no monotone 1-row fixpoint certificate
+    for PageRank, so a tolerance test would cost one action per round).
+    The out-degree-normalized edges carry the node count ``n`` and are
+    materialized once; round 1 (uniform ranks) is one groupBy over them,
+    every later round one join (edges ⋈ ranks) + one groupBy(dst). The
+    rounds are not checkpointed: Spark 4.1's ``localCheckpoint(eager=
+    False)`` still runs the plan's shuffle/broadcast stages when called,
+    which cost ~6.6 jobs per round at construction (OPTIMIZATION_r13.md,
+    Batch E addendum).
 
-    Isolated nodes don't occur (every node is in ≥1 edge by
-    construction); the symmetrized graph has no dangling nodes either,
-    so the (1−d)/N teleport term is exact without a dangling-mass
+    Every node is in ≥1 edge and the symmetrized graph gives every node
+    an in-edge and an out-edge, so the grouped contributions cover every
+    node and the (1−d)/N teleport term is exact without a dangling-mass
     correction.
 
     Returns (id, rank) with ranks summing to 1.
     """
+    if int(n_iter) < 1:
+        raise ValueError(f"pagerank needs n_iter >= 1, got {n_iter=}")
     sym = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .union(edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")))
         .distinct()
-        .localCheckpoint()
     )
     deg = sym.groupBy("src").agg(F.count("*").alias("out_deg"))
+    deg = deg.crossJoin(F.broadcast(deg.agg(F.count("*").alias("n"))))
     norm_edges = sym.join(deg, "src").select(
-        "src", "dst", (F.lit(1.0) / F.col("out_deg")).alias("w")
+        "src", "dst", (F.lit(1.0) / F.col("out_deg")).alias("w"), "n"
     ).localCheckpoint()
-    nodes = deg.select(F.col("src").alias("id"))
-    n_nodes = nodes.agg(F.count("*").alias("n"))
-    ranks = nodes.join(F.broadcast(n_nodes)).select(
-        "id", (F.lit(1.0) / F.col("n")).alias("rank")
-    )
+    contrib = norm_edges.withColumn("rank", F.lit(1.0) / F.col("n"))
     for _ in range(int(n_iter)):
-        contrib = (
-            norm_edges.join(ranks, norm_edges["src"] == ranks["id"])
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") * F.col("w")).alias("in_mass"))
+        ranks = contrib.groupBy("dst", "n").agg(
+            ((1.0 - damping) / F.col("n") + damping * F.sum(F.col("rank") * F.col("w")))
+            .alias("rank")
         )
-        ranks = (
-            nodes.join(contrib, nodes["id"] == contrib["dst"], "left")
-            .join(F.broadcast(n_nodes))
-            .select(
-                "id",
-                (
-                    (1.0 - damping) / F.col("n")
-                    + damping * F.coalesce("in_mass", F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return ranks
+        contrib = norm_edges.join(ranks.select(F.col("dst").alias("src"), "rank"), "src")
+    return ranks.select(F.col("dst").alias("id"), "rank")
 
 
 def triangle_stats(
@@ -195,13 +174,8 @@ def triangle_stats(
     Returns (id, degree, n_triangles, clustering_coeff) for every node
     in ≥1 edge; coefficient is 0 for degree < 2.
     """
-    # No materialization of the canonical edge list (r13, measured tie:
-    # lc 0.776 s vs no-cache 0.738 s min-of-6 on the staged consumer):
-    # the distinct() ends in an exchange AQE reuses across the three
-    # self-join aliases at runtime, recompute keeps lineage replayable
-    # on executor loss (§5), and dropping the EAGER checkpoint also
-    # stops query CONSTRUCTION from running a job (registry tools build
-    # plans without executing them).
+    # No materialization (measured tie; OPTIMIZATION_r13.md, Batch L): the
+    # distinct()'s exchange is reused across the three self-join aliases.
     e = (
         edges.select(
             F.least(src_col, dst_col).alias("a"),
@@ -274,10 +248,10 @@ def bfs_hops(
     anti-join against the visited set, the Pregel BFS as DataFrame
     algebra. Rounds are bounded by min(graph diameter, max_hops); dup
     graphs are near-cliques so the frontier empties in a handful of
-    rounds. Lineage is cut per round with a lazy localCheckpoint whose
-    materializing action IS the frontier-empty test (one job per
-    round); the visited set only ever grows by the new frontier, so
-    per-round cost tracks the answer, not the corpus.
+    rounds. Lineage is cut per round (the cut itself runs the round's
+    shuffle stages, see the module docstring); the frontier-empty count
+    decides termination. The visited set only ever grows by the new
+    frontier, so per-round cost tracks the answer, not the corpus.
     """
     sym = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
@@ -339,15 +313,10 @@ def common_neighbor_stats(
     Returns (id_a, id_b, common_neighbors, neighbor_jaccard) for every
     input edge (zero-common edges included).
     """
-    # Materialize-once is a measured 15% win here (lc 0.587 s vs
-    # no-cache 0.689 s min-of-6): `e` fans out five ways (both union
-    # arms of sym, the wedge join's probe, and the final attach), and
-    # only two of those share a reusable exchange. Documented §5 trade:
-    # localCheckpoint truncates lineage (an executor loss after
-    # materialization fails the query instead of recomputing) — taken
-    # deliberately for the measured win; LAZY so building the plan
-    # stays side-effect-free (the materializing action is the query's
-    # own first job).
+    # Materialize-once is a measured 15% win (OPTIMIZATION_r13.md, Batch
+    # L): `e` fans out five ways and only two share a reusable exchange.
+    # Trade: localCheckpoint truncates lineage (executor loss fails the
+    # query), and the call runs the distinct's shuffle (1 job at build).
     e = edges.select(src_col, dst_col).distinct().localCheckpoint(eager=False)
     sym = e.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
@@ -473,8 +442,7 @@ def kmeans_lloyd(
     # clipping the result scale to 11 dp and silently rounding — while
     # (37,12) lands exactly on (38,12), lossless. 25 integer digits
     # put the per-term overflow→NULL bound at (v_i−c_i)² ≥ 1e25
-    # (|v_i−c_i| ≥ ~3.2e12; the previous (20,12) term overflowed at
-    # 1e8, within reach of real embedding magnitudes — r5 ADVICE).
+    # (|v_i−c_i| ≥ ~3.2e12).
     _acc, _term, _out = "decimal(30,12)", "decimal(37,12)", "decimal(38,12)"
 
     def _one_row_centroids(c: DataFrame) -> DataFrame:

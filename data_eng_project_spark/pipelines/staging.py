@@ -16,10 +16,8 @@ Mechanics
 - Stage files are keyed by (artifact kind, absolute source dir,
   parameters, stage version, producing-operator source fingerprint):
   a different corpus or threshold is a different artifact, and ANY
-  edit to the producing operator's code rotates the key — a semantic
-  change can never leave a stale artifact valid in a persistent
-  $SPARK_GRAFT_STAGE_DIR (ADVICE r4; the round-4 positional-filter
-  fix changed pair output under an unchanged key).
+  edit to the producing operator's code rotates the key, so a stale
+  artifact is never served from a persistent $SPARK_GRAFT_STAGE_DIR.
 - Writes are atomic: the job lands in a pid-suffixed temp dir which is
   then rename(2)d into place — a concurrent builder loses the race
   harmlessly and reads the winner's output.
@@ -41,31 +39,21 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from data_eng_project_spark.tables import read_parquet
+
 # Manual epoch for key-schema changes to *this* module. Semantic changes
 # to the staged OPERATORS invalidate keys automatically via
-# _op_fingerprint below — no human has to remember a bump.
-# (v2: retro-invalidates any artifact materialized before the round-4
-# PPJoin positional-filter soundness fix, which changed
-# ngram_jaccard_pairs output; pre-fix parquet under a persistent
-# $SPARK_GRAFT_STAGE_DIR must never be served as current.)
+# _op_fingerprint below.
 _STAGE_VERSION = 2
 
 
 def _op_fingerprint(*ops) -> str:
-    """Digest of the staged operators' source code: any edit to the code
-    that produces a staged artifact yields a new stage key, so a semantic
-    change can never leave stale artifacts valid (the failure mode a
-    memory-dependent manual version constant allows). Comment-only edits
-    also rotate the key — a few seconds of rebuild, bought for the
-    guarantee.
-
-    The digest covers the operator's own source AND its defining source
-    FILE in full: the motivating round-4 bug class (a fix inside a
-    same-module callee such as ``_verified_jaccard`` changing
-    ``ngram_jaccard_pairs`` output while the named function's bytes stay
-    identical) must rotate the key too. Cross-module callees are the
-    remaining blind spot; staged producers keep their helper chain in
-    their own module by convention."""
+    """Digest of the staged operators' source code AND their defining
+    source files in full, so an edit to the producer or to a same-module
+    callee (e.g. ``_verified_jaccard`` under ``ngram_jaccard_pairs``)
+    yields a new stage key. Comment-only edits also rotate the key.
+    Cross-module callees are the blind spot; staged producers keep their
+    helper chain in their own module by convention."""
     h = hashlib.md5()
     hashed_files = set()
     for op in ops:
@@ -167,7 +155,7 @@ def near_dup_pairs(
         docs = load_table(spark, sf_dir, "documents")
         pairs = D.ngram_jaccard_pairs(docs, "text", "doc_id", n=n, threshold=threshold)
         materialize_once(pairs, path)
-    return spark.read.parquet(path).select("id_a", "id_b", "jaccard")
+    return read_parquet(spark, path).select("id_a", "id_b", "jaccard")
 
 
 # The five registry consumers of the staged pair graph — the single
@@ -188,15 +176,11 @@ def timed_staged_run(spark: SparkSession, sf_dir: str) -> dict:
     cold build (pair graph + components materialization) then the five
     warm consumers reading the stage. Returns
     {"cold_build_sec": ..., "warm_consumers_sec": ...,
-     "consumer_sec": {name: sec}} — the per-consumer split is the r13
-    observability fix (VERDICT r12: the r12 artifact only recorded the
-    group total, so a claimed per-consumer win could not be checked
-    against the driver's own run). ``warm_consumers_sec`` keeps its
-    exact r12 meaning (one wall-clock interval over the loop) for
-    cross-round comparability; per-consumer values are timed inside it.
-    Restores $SPARK_GRAFT_STAGE_DIR and removes the temp dir on exit;
-    unknown consumer names raise (a silent skip would report a fake
-    speedup)."""
+     "consumer_sec": {name: sec}}; ``warm_consumers_sec`` is one
+    wall-clock interval over the loop, per-consumer values are timed
+    inside it. Restores $SPARK_GRAFT_STAGE_DIR and removes the temp dir
+    on exit; unknown consumer names raise (a silent skip would report a
+    fake speedup)."""
     import time
 
     from data_eng_project_spark.plans import REGISTRY
@@ -251,4 +235,4 @@ def dup_components(
     if not _is_staged(path):
         pairs = near_dup_pairs(spark, sf_dir, n=n, threshold=threshold)
         materialize_once(connected_components(pairs), path)
-    return spark.read.parquet(path).select("id", "comp")
+    return read_parquet(spark, path).select("id", "comp")

@@ -520,11 +520,11 @@ def incremental_join_view_update(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pagerank_oracle(n_iter: int = 10, damping: float = 0.85) -> str:
     """Recursive SQL rejects aggregation inside the recursive term, but
     a FIXED-iteration power method unrolls into ``n_iter`` chained CTEs
-    — one join+groupBy matvec each, exactly mirroring the DataFrame
-    loop in operators/clusters.pagerank. Rounding to 6 dp happens once
-    at the end on both engines; the ~1e-15-relative float-order noise
-    of ten compounded sums sits far below that (same accepted risk
-    class as every rounded-cosine oracle)."""
+    — one join+groupBy matvec each, the same arithmetic as the
+    DataFrame loop in operators/clusters.pagerank. Rounding to 6 dp
+    happens once at the end on both engines; the ~1e-15-relative
+    float-order noise of ten compounded sums sits far below that (same
+    accepted risk class as every rounded-cosine oracle)."""
     teleport = f"{1.0 - damping!r}"
     steps = []
     for i in range(1, n_iter + 1):

@@ -4,11 +4,16 @@ Tables: region nation customer supplier part orders lineitem events
 documents embeddings — one parquet file per table under a scale-factor
 directory such as ``/root/testdata/sf0.01``.
 
-Design notes for scale: the loader is a plain ``spark.read.parquet`` so
-Catalyst's vectorized parquet reader, column pruning, and predicate
-pushdown all apply. At 100 TB these tables would be partitioned
-directories (e.g. orders by ``year(o_orderdate)``) and the same code
-path would pick up partition pruning for free.
+Table reads (and the staged artifacts of pipelines/staging.py) go
+through ``read_parquet``, a plain ``spark.read.parquet``
+(vectorized reader, column pruning, predicate pushdown, partition
+pruning on partitioned directories) whose schema is pinned after the
+first read. Spark infers a parquet schema with one job per read; the
+memo keeps the inferred schema keyed by the identity of the data files
+(path, size, ``mtime_ns`` of the file, or of every data file under a
+directory) and by the parquet-inference confs, so a repeated read of
+unchanged files runs no job and a rewritten file is re-inferred.
+Non-local paths (nothing to ``stat``) are inferred on every read.
 """
 
 from __future__ import annotations
@@ -31,15 +36,58 @@ TABLE_NAMES = (
 )
 
 
+# Confs that change what parquet schema inference returns for the same
+# files (nanosAsLong decides the events ``ts`` type).
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+# Process-wide: a key names exact file contents, so any session may share it.
+_SCHEMAS: dict = {}
+
+
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def _file_identity(path: str) -> tuple:
+    """(path, size, mtime_ns) of the file, or of every data file under
+    the directory (Spark's own rule: names starting with ``_`` or ``.``
+    are metadata). Raises OSError when ``path`` is not local."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return ((path, st.st_size, st.st_mtime_ns),)
+    ident = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for f in files:
+            if not f.startswith(("_", ".")):
+                p = os.path.join(root, f)
+                st = os.stat(p)
+                ident.append((p, st.st_size, st.st_mtime_ns))
+    return tuple(sorted(ident))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema only on the
+    first read of these files (see the module docstring)."""
+    try:
+        key = (_file_identity(path), tuple(spark.conf.get(c, None) for c in _INFER_CONFS))
+    except OSError:  # remote or missing: Spark infers (or raises) as usual
+        return spark.read.parquet(path)
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _SCHEMAS[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from data_eng_project_spark.session import prepare
 
     prepare(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = read_parquet(spark, table_path(sf_dir, name))
     if name == "events":
         # The generator has stored ts two ways across rounds:
         # TIMESTAMP(NANOS) (arrives as a nanosecond long under

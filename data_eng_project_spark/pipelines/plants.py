@@ -38,9 +38,7 @@ CONSUMED = {
 
 def _stage_plants(spark: SparkSession, path: str) -> DataFrame:
     raw = read_csv(spark, path, sep=";")
-    return raw.select(
-        *[F.col(src).cast("string").alias(dst) for src, dst in CONSUMED.items()]
-    )
+    return raw.select(*[F.col(src).alias(dst) for src, dst in CONSUMED.items()])
 
 
 def build_power_plants(

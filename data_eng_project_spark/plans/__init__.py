@@ -9,7 +9,8 @@ and order-insensitive value hashes — so every query here is written for
 - monetary/quantity sums go through decimal casts (exact, order-free);
 - double-valued outputs are rounded (haversine 3 dp, ratios/cosines 6 dp);
 - every ordering used with LIMIT has a total deterministic tie-break;
-- timestamps rely on session.prepare pinning the session TZ to UTC.
+- timestamps rely on session.prepare pinning the session TZ to UTC;
+  registry.register applies it to the session on every query call.
 """
 
 from __future__ import annotations

@@ -13,7 +13,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_eng_project_spark.plans.registry import register
-from data_eng_project_spark.session import prepare
 from data_eng_project_spark.tables import load_table, rebalance_if_unsplittable
 
 # Exact (order-insensitive) decimal sum of a double expression: round the
@@ -58,7 +57,6 @@ def _dec_sum_dbl(col: F.Column, nd: int = 6) -> F.Column:
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q1-style pricing summary: the canonical wide aggregation.
     Map-side partial aggregation + one shuffle on the (tiny) group key."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") <= F.lit("2001-09-01 00:00:00").cast("timestamp")
     )
@@ -113,7 +111,6 @@ def q3_top_unshipped_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q3-style: selective dimension filter → fact join → grouped
     revenue → deterministic top-k. The customer filter is pushed to the
     scan; the orders↔lineitem join shuffles on the order key."""
-    prepare(spark)
     cust = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-01-01 00:00:00").cast("timestamp")
@@ -161,7 +158,6 @@ def q5_region_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q5-style: six-way join with two broadcastable dims (region,
     nation), local-supplier predicate, grouped revenue. Catalyst broadcast
     region/nation/supplier; AQE picks strategies for the fact joins."""
-    prepare(spark)
     region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     nation = load_table(spark, sf_dir, "nation")
     cust = load_table(spark, sf_dir, "customer")
@@ -202,7 +198,6 @@ def q5_region_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rollup_order_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical ROLLUP aggregation (free from Spark SQL — declared and
     verified per SURVEY.md §2.4 note)."""
-    prepare(spark)
     orders = load_table(spark, sf_dir, "orders")
     return (
         orders.rollup("o_orderstatus", "o_orderpriority")
@@ -238,7 +233,6 @@ def rollup_order_status(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def window_rank_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partitioned top-n via row_number (window functions surface)."""
-    prepare(spark)
     events = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("event_type").orderBy(F.col("value").desc(), F.col("event_id").asc())
     return (
@@ -266,7 +260,6 @@ def window_rank_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def moving_avg_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-frame moving average per user (rowsBetween frame); decimal
     numerator keeps the frame sum order-independent."""
-    prepare(spark)
     events = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -315,7 +308,6 @@ def moving_avg_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gaps-and-islands sessionization (30-min inactivity gap): the batch
     twin of streaming session windows. lag → flag → running sum → group."""
-    prepare(spark)
     events = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
     us = F.unix_micros(F.col("ts"))
@@ -353,7 +345,6 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-time tumbling-window aggregation, batch form (streaming twin
     in streaming/windows.py uses window(ts, '1 hour') + watermark)."""
-    prepare(spark)
     events = load_table(spark, sf_dir, "events")
     return (
         events.groupBy(F.date_trunc("hour", F.col("ts")).alias("window_start"), F.col("event_type"))
@@ -385,7 +376,6 @@ def events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def topk_customers_by_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global deterministic top-k after a join + aggregation (TakeOrdered
     physical op — no full sort at scale)."""
-    prepare(spark)
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     return (
@@ -417,7 +407,6 @@ def topk_customers_by_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def set_ops_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT: customers having both open and finished orders."""
-    prepare(spark)
     orders = load_table(spark, sf_dir, "orders")
     o = orders.filter(F.col("o_orderstatus") == "O").select("o_custkey")
     f = orders.filter(F.col("o_orderstatus") == "F").select("o_custkey")
@@ -435,7 +424,6 @@ def set_ops_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def set_ops_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT: customers with open orders but no finished ones."""
-    prepare(spark)
     orders = load_table(spark, sf_dir, "orders")
     o = orders.filter(F.col("o_orderstatus") == "O").select("o_custkey")
     f = orders.filter(F.col("o_orderstatus") == "F").select("o_custkey")
@@ -456,7 +444,6 @@ def set_ops_except(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def distinct_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multiple distinct aggregates in one grouping (expand-based plan)."""
-    prepare(spark)
     orders = load_table(spark, sf_dir, "orders")
     return orders.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_orders"),
@@ -486,7 +473,6 @@ def distinct_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scalar_kitchen_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String/math scalar-function surface in one verified projection."""
-    prepare(spark)
     part = load_table(spark, sf_dir, "part")
     return part.select(
         "p_partkey",
@@ -519,7 +505,6 @@ def scalar_kitchen_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 def array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array-function surface over the embedding column: size, aggregate
     (sequential double fold), element min/max via array_min/array_max."""
-    prepare(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     vec_sum = F.aggregate(
         F.transform(F.col("embedding"), lambda x: x.cast("double")),

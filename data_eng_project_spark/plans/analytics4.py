@@ -34,7 +34,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_eng_project_spark.plans.registry import register
-from data_eng_project_spark.session import prepare
 from data_eng_project_spark.tables import load_table
 
 _DEC = "decimal(28,6)"
@@ -75,7 +74,6 @@ def q7_nation_pair_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier and customer shrink ~12× before touching the facts); the
     disjunctive pair predicate is applied after both sides are tagged,
     on the already-joined row — no cartesian anywhere."""
-    prepare(spark)
     nation = load_table(spark, sf_dir, "nation").filter(
         F.col("n_name").isin("NATION_1", "NATION_2")
     )
@@ -128,7 +126,6 @@ def q9_profit_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape (no partsupp in this schema, so profit is revenue):
     content filter on p_name prunes the part dim before it broadcasts;
     supplier and nation broadcast; one shuffle for the final group-by."""
-    prepare(spark)
     part = (
         load_table(spark, sf_dir, "part")
         .filter(F.col("p_name").contains("bolt"))
@@ -170,7 +167,6 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fact table is scanned ONCE; the one-row total broadcasts into
     the filter. Threshold compared in double on both engines, derived
     from identical exact decimal sums."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_extendedprice", "l_discount"
     )
@@ -210,7 +206,6 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate), then joins back on partkey. Average as exact-decimal-sum
     ÷ count in double so the 0.2× threshold is bit-identical across
     engines."""
-    prepare(spark)
     part = (
         load_table(spark, sf_dir, "part")
         .filter(F.col("p_brand") == "Brand#11")
@@ -263,7 +258,6 @@ def q20_top_part_family_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame
     broadcast part-family filter → per-supplier decimal agg → one-row
     mean broadcast into the threshold filter → left-semi join into the
     supplier dim. Fact scanned once."""
-    prepare(spark)
     part = (
         load_table(spark, sf_dir, "part")
         .filter(F.col("p_name").startswith("red"))
@@ -319,7 +313,6 @@ def q21_sole_late_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     residual inequality filters, so they hash-partition on the same key
     as the base join — AQE coalesces the three shuffles onto one
     exchange layout."""
-    prepare(spark)
     late = F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")
     orders = (
         load_table(spark, sf_dir, "orders")
@@ -384,7 +377,6 @@ def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     customers in seven nations with no recent orders. Scalar threshold
     broadcasts; NOT EXISTS → left-anti against the date-pruned orders
     scan; final group-by is 7 groups."""
-    prepare(spark)
     nations = [1, 2, 3, 4, 5, 6, 7]
     cust = (
         load_table(spark, sf_dir, "customer")
@@ -440,7 +432,6 @@ def window_function_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     are the scale-out lever for window work."""
     from pyspark.sql import Window
 
-    prepare(spark)
     w = Window.partitionBy("c_mktsegment", "c_nationkey").orderBy(
         "c_acctbal", "c_custkey"
     )
@@ -481,7 +472,6 @@ def approx_price_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     of slack for interpolation at exact array boundaries). The booleans
     are genuinely computed from a second exact pass; DuckDB asserts the
     group sizes and that every guarantee held."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem")
     eps = 1.0 / 10000
     pct = F.expr(

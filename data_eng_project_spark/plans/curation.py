@@ -20,7 +20,6 @@ from data_eng_project_spark.operators.curation import (
     source_quality_profile,
 )
 from data_eng_project_spark.plans.registry import register
-from data_eng_project_spark.session import prepare
 from data_eng_project_spark.tables import load_table
 
 # documents.source = 'src0' plays the held-out benchmark; the rest train.
@@ -76,7 +75,6 @@ def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     its distinct 3-gram shingles that appear in the held-out benchmark
     split — flagged above threshold. Broadcast semi-join on hashed
     shingles; never all-pairs."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     return decontaminate_overlap(
         docs.filter(F.col("source") != _BENCH_SOURCE),
@@ -119,7 +117,6 @@ def pack_sequences_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     concatenate in id order into a token stream split into 512-token
     chunks; each doc gets its offset and chunk range. One windowed cumsum
     per shard — no global ordering."""
-    prepare(spark)
     return pack_sequences(
         load_table(spark, sf_dir, "documents"), chunk_tokens=_CHUNK_TOKENS
     )
@@ -166,7 +163,6 @@ def pack_sequences_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
 def source_quality_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source curation rollup: volume, length stats, exact-dup rate,
     modal-language purity — the table sources get pruned by."""
-    prepare(spark)
     return source_quality_profile(load_table(spark, sf_dir, "documents"))
 
 
@@ -193,7 +189,6 @@ def source_quality_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric per-vector int8 scalar quantization with round-trip
     RMSE — row-local array math in codegen, no shuffle, no Python."""
-    prepare(spark)
     return quantize_embeddings_int8(load_table(spark, sf_dir, "embeddings"))
 
 
@@ -266,7 +261,6 @@ def quantized_topk_agreement_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     retrieval-safe) — the retrieval-impact companion to
     embedding_quantize_int8's reconstruction RMSE (see
     operators/curation.quantized_topk_agreement)."""
-    prepare(spark)
     from data_eng_project_spark.operators.curation import (
         quantized_topk_agreement,
     )
@@ -320,7 +314,6 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from data_eng_project_spark.tables import table_path
 
-    prepare(spark)
     stream = read_events_stream(spark, table_path(sf_dir, "events"))
     return run_available_now(
         session_bounds_stream(stream), f"mem_sessions_{uuid.uuid4().hex[:8]}"
@@ -371,7 +364,6 @@ def repetition_filter_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id, word-count-shaped at scale."""
     from data_eng_project_spark.operators.curation import repetition_signals
 
-    prepare(spark)
     return repetition_signals(load_table(spark, sf_dir, "documents"))
 
 
@@ -397,7 +389,6 @@ def mixture_sample_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     id hash — a pure pushdown filter, reproducible on any cluster."""
     from data_eng_project_spark.operators.curation import mixture_sample
 
-    prepare(spark)
     src_num = F.substring("source", 4, 10).cast("int")
     rate = (
         F.when(src_num % 4 == 0, 100)
@@ -430,7 +421,6 @@ def length_trim_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer boundary arithmetic — no float interpolation)."""
     from data_eng_project_spark.operators.curation import length_trim_by_group
 
-    prepare(spark)
     return length_trim_by_group(load_table(spark, sf_dir, "documents"))
 
 
@@ -464,7 +454,6 @@ def export_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate of the pack annotations export_training_shards writes; the
     export side effect itself is exercised in pytest (this query
     computes the manifest without writing)."""
-    prepare(spark)
     packed = pack_sequences(
         load_table(spark, sf_dir, "documents"), chunk_tokens=_CHUNK_TOKENS
     )
@@ -516,7 +505,6 @@ def chunk_assembly_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk table), so assembly cost is output-sized. With this table a
     loader gathers one fixed-size training chunk by slicing the listed
     docs in order — the exact inverse of pack_sequences' layout."""
-    prepare(spark)
     packed = pack_sequences(
         load_table(spark, sf_dir, "documents"), chunk_tokens=_CHUNK_TOKENS
     ).filter(F.col("n_tokens") > 0)

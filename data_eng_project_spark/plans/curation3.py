@@ -39,7 +39,6 @@ from data_eng_project_spark.plans.textdata import (
     _NGRAM_CTES,
     JACCARD_THRESHOLD,
 )
-from data_eng_project_spark.session import prepare
 from data_eng_project_spark.tables import load_table
 
 _TRAIN_PCT = 80
@@ -96,7 +95,6 @@ def dataset_split_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     composition report. Split membership is a function of doc_id alone
     (md5 bucket), so it survives re-partitioning and incremental
     corpus growth — the invariant a 100 TB dataset release needs."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     return split_profile(
         docs, train_pct=_TRAIN_PCT, val_pct=_VAL_PCT
@@ -124,7 +122,6 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit's duplicate notion is the pipeline's own. Consumes the
     STAGED pair graph (pipelines/staging.py), shared with the other
     pair-graph consumers."""
-    prepare(spark)
     from data_eng_project_spark.pipelines.staging import near_dup_pairs
 
     pairs = near_dup_pairs(spark, sf_dir, n=3, threshold=JACCARD_THRESHOLD)
@@ -172,7 +169,6 @@ def boilerplate_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     segments whose verbatim text recurs in ≥3 distinct documents —
     segmentation is pure array algebra on the scanned row, then two
     hash aggregations on 16-byte segment fingerprints."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     return boilerplate_segment_stats(docs, k=_SEG_K, min_df=_SEG_MIN_DF)
 
@@ -226,7 +222,6 @@ def cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≈ 8 words), so insertions re-align instead of shifting every
     downstream chunk — the shift-robust dedup accounting fixed windows
     cannot give."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     return cdc_chunk_stats(docs)
 
@@ -268,7 +263,6 @@ def soft_dedup_weights_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicate families contribute one document's training mass instead
     of being dropped — per-doc weights and effective token counts for
     the mixture planner."""
-    prepare(spark)
     from data_eng_project_spark.operators.curation import soft_dedup_weights
     from data_eng_project_spark.pipelines.staging import dup_components
 
@@ -320,7 +314,6 @@ def corpus_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum over the 1024-row bucket-size table — every row gets a stable
     position in a fixed pseudo-random permutation, computed with no
     single-partition pass over data rows."""
-    prepare(spark)
     from data_eng_project_spark.operators.datasetops import shuffle_order
 
     return shuffle_order(load_table(spark, sf_dir, "documents"))
@@ -355,7 +348,6 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     similar different-label vectors (rounded-cosine ranking, id
     tie-break — bit-stable across engines). Exact baseline; the GEMM
     blocked k-NN join is the documented scale path."""
-    prepare(spark)
     from data_eng_project_spark.operators.similarity import hard_negative_topk
 
     return hard_negative_topk(load_table(spark, sf_dir, "embeddings"), k=3)
@@ -395,7 +387,6 @@ def mixture_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.7, 0.3 — flattening the source distribution so low-resource
     sources aren't starved. One rollup + a broadcast 1-row normalizer;
     pow on exact BIGINT token counts is deterministic cross-engine."""
-    prepare(spark)
     from data_eng_project_spark.functions.text import tokens
 
     docs = load_table(spark, sf_dir, "documents")
@@ -441,7 +432,6 @@ def dataset_release_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     table. The oracle replays every stage in SQL (recursive transitive
     closure for the dup components), so the whole chained semantics is
     bit-certified, not just each stage in isolation."""
-    prepare(spark)
     from data_eng_project_spark.pipelines.composer import compose
     from data_eng_project_spark.functions.text import tokens as _tokens
 
@@ -541,7 +531,6 @@ def hard_negative_mining_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     different-label vectors without materializing the similarity
     matrix or the n² pair list. Shuffle carries k rows per (query,
     corpus-block); corpus replication is n_query_blocks×."""
-    prepare(spark)
     from data_eng_project_spark.operators.similarity import knn_join_blocked
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -567,7 +556,6 @@ def quality_retention_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     purpose: the heavy pass is a pure map-side bucket aggregate with no
     global sort, and the cumulative sweep is a window over the ~13 band
     rows — the PSI-bucket pattern, scale-free."""
-    prepare(spark)
     from pyspark.sql import Window
 
     from data_eng_project_spark.functions.text import tokens as _tokens
@@ -682,7 +670,6 @@ def dataset_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
     (metric, value) rows — the numbers a dataset card's quantitative
     section publishes. One aggregate over the corpus (distinct counts
     partial-aggregated), then a 9-row unpivot."""
-    prepare(spark)
     from data_eng_project_spark.functions.text import tokens as _tokens
 
     docs = load_table(spark, sf_dir, "documents")
@@ -776,7 +763,6 @@ def split_shingle_leakage_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     diffuse kind (shared boilerplate, templated text) that no single
     pair crosses the Jaccard threshold for. One inverted-index
     semi-join on 8-byte shingle hashes per eval split."""
-    prepare(spark)
     from data_eng_project_spark.operators.curation import split_column
     from data_eng_project_spark.operators.dedup import _distinct_shingles
 
@@ -816,7 +802,6 @@ def compression_quality_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
     flags — the entropy-proxy quality screen (machine-generated
     repetition compresses too well, noise too poorly). Arrow-batched;
     fixed codec level so results are run- and cluster-invariant."""
-    prepare(spark)
     from data_eng_project_spark.operators.textops import compression_ratio_signal
 
     return compression_ratio_signal(load_table(spark, sf_dir, "documents"))
@@ -850,7 +835,6 @@ def compression_roundtrip_report_q(spark: SparkSession, sf_dir: str) -> DataFram
     corpus totals fully oracle-recomputed — the graded-accuracy
     companion to the rows-only per-document signal
     (see operators/textops.compression_roundtrip_report)."""
-    prepare(spark)
     from data_eng_project_spark.operators.textops import (
         compression_roundtrip_report,
     )
@@ -894,7 +878,6 @@ def temporal_split_user_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     carelessly across the cut. Exact integer-microsecond cut (no float
     timestamp math). One scan for the cut (2-value aggregate,
     broadcast), one grouped conditional aggregate."""
-    prepare(spark)
     events = load_table(spark, sf_dir, "events").withColumn(
         "_us", F.unix_micros("ts")
     )
@@ -960,7 +943,6 @@ def minhash_accuracy_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     evidence that justifies running the sketch path at 100 TB where the
     exact join's candidate set would be too hot; the DuckDB oracle
     recomputes the exact side independently and asserts the contract."""
-    prepare(spark)
     from data_eng_project_spark.pipelines.staging import near_dup_pairs
     from data_eng_project_spark.plans.textdata import JACCARD_THRESHOLD
 
@@ -1036,7 +1018,6 @@ def source_token_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     mixture_temperature_weights, which is the corrective lever). The
     corpus pass is one rollup; the Gini formula runs on |sources|
     rows via exact integer sums."""
-    prepare(spark)
     from pyspark.sql import Window
 
     from data_eng_project_spark.functions.text import tokens as _tokens
@@ -1114,7 +1095,6 @@ def split_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     stratified splitting exists to prevent. Exact decimal-accumulated
     means per (split, label, dim); the drift join runs on
     |labels|×|dims| rows, never on vectors."""
-    prepare(spark)
     from data_eng_project_spark.operators.curation import split_column
 
     emb = load_table(spark, sf_dir, "embeddings").withColumn(

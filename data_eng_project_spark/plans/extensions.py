@@ -21,7 +21,6 @@ from data_eng_project_spark.operators.multimodal import (
 )
 from pyspark.sql import functions as F
 from data_eng_project_spark.plans.registry import register
-from data_eng_project_spark.session import prepare
 from data_eng_project_spark.streaming.incremental import read_events_stream
 from data_eng_project_spark.streaming.windows import hourly_counts_stream, run_available_now
 from data_eng_project_spark.tables import load_table, table_path
@@ -41,7 +40,6 @@ from data_eng_project_spark.tables import load_table, table_path
 def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming tumbling-window aggregation run to completion
     with Trigger.AvailableNow; final state must equal the batch oracle."""
-    prepare(spark)
     stream = read_events_stream(spark, table_path(sf_dir, "events"))
     agg = hourly_counts_stream(stream)
     return run_available_now(agg, f"mem_hourly_{uuid.uuid4().hex[:8]}")
@@ -67,7 +65,6 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     state) drained with AvailableNow — checked against the same batch
     inequality-join oracle as events_within_minute: the stream's final
     output equals the batch answer."""
-    prepare(spark)
     from data_eng_project_spark.streaming.windows import stream_stream_pairs
 
     a = read_events_stream(spark, table_path(sf_dir, "events"))
@@ -109,7 +106,6 @@ def streaming_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    prepare(spark)
     from data_eng_project_spark.streaming.incremental import stream_asof_enrich
 
     orders = (
@@ -163,7 +159,6 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    prepare(spark)
     from data_eng_project_spark.streaming.windows import dedup_events_stream
 
     src = table_path(sf_dir, "events")
@@ -251,7 +246,6 @@ def multimodal_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema — is real). The oracle re-derives the stub's digest math in
     SQL, so the driver check covers the whole binary round trip:
     utf-8 encode → sha256 over the payload bytes → byte extraction."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     return extract_media_meta(attach_fake_media(docs))
 
@@ -278,7 +272,6 @@ def multimodal_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_frame_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video frame-sampling plumbing: one row per sampled frame index
     (every second of fake duration) for each video payload."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     return frame_sample_stub(attach_fake_media(docs), every_ms=1000)
 
@@ -329,7 +322,6 @@ def multimodal_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole encode→decode round trip; the resized payload bytes stay
     pinned by the pytest round-trip/property tests (zlib streams are not
     SQL-reproducible)."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     out = resize_png_images(attach_png_images(docs), max_side=64)
     return out.select(
@@ -440,7 +432,6 @@ def multimodal_resize_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
         resize_raw_images,
     )
 
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     resized = resize_raw_images(attach_raw_images(docs), max_side=64)
     return resized.select(
@@ -513,7 +504,6 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_audio_features,
     )
 
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     feats = extract_audio_features(attach_raw_audio(docs))
     return feats.select(
@@ -568,7 +558,6 @@ def multimodal_video_frames_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
         sample_raw_frames,
     )
 
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     frames = sample_raw_frames(attach_raw_video(docs), every_n=6)
     return frames.select(
@@ -601,7 +590,6 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     result must equal the batch three-table join oracle. See
     streaming/windows.static_enrich_counts_stream for the state-size
     argument (dimension rows never enter streaming state)."""
-    prepare(spark)
     from data_eng_project_spark.streaming.windows import static_enrich_counts_stream
 
     stream = read_events_stream(spark, table_path(sf_dir, "events"))
@@ -795,7 +783,6 @@ def multimodal_phash_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         phash_images,
     )
 
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     fp = phash_images(attach_noise_grouped_images(docs, groups=100))
     return (
@@ -870,7 +857,6 @@ def bloom_join_prune_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's runtime row-level filtering, made portable and testable."""
     from data_eng_project_spark.operators.joins import bloom_build, bloom_probe_keys
 
-    prepare(spark)
     orders = load_table(spark, sf_dir, "orders")
     lineitem = load_table(spark, sf_dir, "lineitem")
     build_keys = (
@@ -949,7 +935,6 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from data_eng_project_spark.tables import table_path
 
-    prepare(spark)
     stream = read_events_stream(spark, table_path(sf_dir, "events"))
     emitted = run_available_now(
         heavy_hitters_stream(stream),
@@ -1028,7 +1013,6 @@ def streaming_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     the PSI join runs on the (hours × types) grid, never on raw events;
     the baseline is a broadcast-sized per-type aggregate.
     """
-    prepare(spark)
     from pyspark.sql import Window
 
     stream = read_events_stream(spark, table_path(sf_dir, "events"))
@@ -1106,7 +1090,6 @@ def streaming_dedup_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-Jaccard verification against only the matched corpus docs.
     History is never rescanned: the probe cost is batch + matched
     buckets, the index is ~16 rows of 20 bytes per corpus document."""
-    prepare(spark)
     import tempfile
 
     from data_eng_project_spark.streaming.dedup_index import (
@@ -1228,7 +1211,6 @@ def streaming_dedup_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame
     exact side fully oracle-recomputed.
     Converts the last trust-the-pytest streaming family into a
     measured, driver-graded accuracy contract."""
-    prepare(spark)
     import os
     import shutil
     import tempfile
@@ -1288,7 +1270,6 @@ def audio_fingerprint_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     50th melody — hash equi-join + ±1-tolerance offset-histogram vote
     returns each probe's best time-aligned catalog match. The waveform
     never crosses the join: only ~n_onsets rows of 20 bytes per clip do."""
-    prepare(spark)
     from data_eng_project_spark.operators.multimodal import (
         attach_melody_audio,
         audio_fingerprints,
@@ -1346,7 +1327,6 @@ def audio_match_accuracy_report_q(spark: SparkSession, sf_dir: str) -> DataFrame
     probes, and vote pipeline as audio_fingerprint_match — graded as
     contract booleans with the probe census oracle-recomputed (see
     operators/multimodal.audio_match_accuracy_report)."""
-    prepare(spark)
     from data_eng_project_spark.operators.multimodal import (
         attach_melody_audio,
         audio_fingerprints,
@@ -1472,7 +1452,6 @@ def video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     executor-side, one output row per detected scene start. The
     keyframe-selection primitive of a video curation pipeline; clips
     never leave the Arrow batch."""
-    prepare(spark)
     from data_eng_project_spark.operators.multimodal import (
         attach_scene_video,
         detect_scene_cuts,

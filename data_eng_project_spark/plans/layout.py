@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 
 from data_eng_project_spark.operators.sink import zorder_frame
 from data_eng_project_spark.plans.registry import register
-from data_eng_project_spark.session import prepare
 from data_eng_project_spark.tables import load_table
 
 # 8 bits per dimension = a 256x256 rank grid: fine enough that bucket
@@ -111,7 +110,6 @@ def zorder_layout_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     rectangle and raw min/max. Every bucket must cover at most a
     quarter of EACH dimension's rank range — the 2-D locality property
     footer-stat pruning relies on, which no single-column sort has."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
     zf = zorder_frame(li, "l_partkey", "l_suppkey", bits=_BITS, keep_ranks=True)
     return (
@@ -179,7 +177,6 @@ def zorder_pruning_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     skips files for BOTH predicates; the linear sort cannot skip any
     file for the trailing column. The decision metric for running
     optimize_table(zorder_cols=...) on a 100 TB table."""
-    prepare(spark)
     li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
     zf = zorder_frame(li, "l_partkey", "l_suppkey", bits=_BITS, keep_ranks=True)
 

@@ -18,7 +18,6 @@ from data_eng_project_spark.operators.joins import (
     upsert_anti_join,
 )
 from data_eng_project_spark.plans.registry import register
-from data_eng_project_spark.session import prepare
 from data_eng_project_spark.tables import load_table
 
 # Fixture files must exist before the driver evaluates either the Spark
@@ -40,7 +39,6 @@ def customer_nation_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Broadcast lookup join chain (reference J1: the driver-side INSEE
     geo-dict probe, dags/global_dag.py:129,133-134, as a real broadcast
     hash join with inner/drop-on-miss semantics)."""
-    prepare(spark)
     customer = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")
     region = load_table(spark, sf_dir, "region")
@@ -67,7 +65,6 @@ def orders_not_in_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental anti-join vs an already-processed ledger (reference
     J2/S13: files-on-disk MINUS Redis ledger, dags/global_dag.py:85-91).
     The ledger here is the subset of keys ≡ 0 (mod 7)."""
-    prepare(spark)
     orders = load_table(spark, sf_dir, "orders")
     ledger = orders.filter(F.col("o_orderkey") % 7 == 0).select("o_orderkey")
     return anti_join(orders, ledger, on="o_orderkey").select(
@@ -91,7 +88,6 @@ def upsert_new_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Idempotent-upsert dataflow (reference S14/J4: generated
     INSERT ... ON CONFLICT DO NOTHING, dags/global_dag.py:144,206,213):
     dedup-on-key then anti-join against the 'existing' table."""
-    prepare(spark)
     orders = load_table(spark, sf_dir, "orders")
     existing = orders.filter(F.col("o_orderkey") % 3 == 0).select("o_orderkey")
     return upsert_anti_join(orders, existing, keys="o_orderkey").select(
@@ -113,7 +109,6 @@ def upsert_new_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 def union_discriminator(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Union-as-integration with a provenance literal (reference J3:
     nuclear ∪ thermal plants, dags/global_dag.py:199-213)."""
-    prepare(spark)
     supplier = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     nuclear = supplier.filter(F.col("s_suppkey") % 2 == 0)
     thermal = supplier.filter(F.col("s_suppkey") % 2 == 1)
@@ -141,7 +136,6 @@ def dedup_first_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop_duplicates on plant name, dags/global_dag.py:190,194 — made
     deterministic with an explicit ordering, since pandas' 'first' is
     input-order-dependent)."""
-    prepare(spark)
     customer = load_table(spark, sf_dir, "customer")
     w = Window.partitionBy("c_mktsegment").orderBy(
         F.col("c_acctbal").desc(), F.col("c_custkey").asc()
@@ -177,7 +171,6 @@ def multi_format_date_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-format, never-throwing date parse (reference F1:
     to_postgres_date, dags/global_dag.py:111-118 — %Y%m%d then %Y-%m-%d,
     NULL on failure). One third of the inputs are deliberately junk."""
-    prepare(spark)
     orders = load_table(spark, sf_dir, "orders")
     ds = (
         F.when(F.col("o_orderkey") % 3 == 0, F.date_format("o_orderdate", "yyyyMMdd"))
@@ -208,7 +201,6 @@ def fixed_width_slices(spark: SparkSession, sf_dir: str) -> DataFrame:
     S8/F2/F3: byte-offset slicing of death records + sha1 id,
     dags/global_dag.py:94-103; md5 here because the oracle engine lacks
     sha1 — the engine's sha1 path is covered in tests/)."""
-    prepare(spark)
     docs = load_table(spark, sf_dir, "documents")
     t = F.col("text")
     return docs.select(
@@ -239,7 +231,6 @@ def gps_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """'lat,lon' string split + cast (reference F4: point_gps_wsg84 split,
     dags/global_dag.py:205,212). The string is built from deterministic
     derived coordinates and round-tripped."""
-    prepare(spark)
     customer = load_table(spark, sf_dir, "customer")
     lat = (F.col("c_custkey") * 37 % 1200) / 10.0 - 60.0
     lon = (F.col("c_custkey") * 91 % 3600) / 10.0 - 180.0
@@ -266,7 +257,6 @@ def gps_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 def validity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NULL/NaN validity filtering (reference P4: NaN lat/long and
     unparseable-date drops, dags/global_dag.py:140-143)."""
-    prepare(spark)
     events = load_table(spark, sf_dir, "events")
     return (
         events.filter(
@@ -293,7 +283,6 @@ def json_field_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     on API JSON, dags/global_dag.py:177-178,242-251). Regex-based so the
     oracle needs no JSON extension; the engine's native path
     (get_json_object / from_json) is covered in tests/."""
-    prepare(spark)
     events = load_table(spark, sf_dir, "events")
     return events.select(
         "event_id",
@@ -337,7 +326,6 @@ def deaths_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     files, against a DuckDB oracle that re-reads the same files. The
     sha1 id column is dropped for the comparison (DuckDB has no sha1);
     its semantics are pinned by tests/test_pipelines.py."""
-    prepare(spark)
     from data_eng_project_spark.pipelines.deaths import run
 
     d = ensure_reference_fixtures()
@@ -391,7 +379,6 @@ def plants_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     plant name — reference-format fixtures, DuckDB oracle re-reading the
     same files. Canonical id dropped for comparison (see
     deaths_pipeline_e2e)."""
-    prepare(spark)
     from data_eng_project_spark.pipelines.plants import build_power_plants
 
     d = ensure_reference_fixtures()

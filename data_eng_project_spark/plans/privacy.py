@@ -18,7 +18,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_eng_project_spark.plans.registry import register
-from data_eng_project_spark.session import prepare
 from data_eng_project_spark.tables import load_table
 
 K_ANON = 10
@@ -72,7 +71,6 @@ def kanonymize_customer_release(spark: SparkSession, sf_dir: str) -> DataFrame:
     residual is dropped, never released). Three grouped counts, no
     Python; the k-invariant is in the oracle, so the driver certifies
     the release property itself."""
-    prepare(spark)
     cust = load_table(spark, sf_dir, "customer")
     base = cust.select(
         F.col("c_nationkey").cast("string").alias("nation_q"),
@@ -142,7 +140,6 @@ def ldiversity_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per (nation, balance-band) group: size, distinct sensitive values,
     and the l ≥ 3 verdict. One grouped aggregate with a distinct count
     — partial-aggregable, no Python, no windows."""
-    prepare(spark)
     customer = load_table(spark, sf_dir, "customer")
     return (
         customer.groupBy(

@@ -5,10 +5,14 @@ Two concerns live here:
 1. ``get_session`` — build a local session with the defaults we want for
    tests/bench (AQE on, Arrow on, shuffle partitions sized to cores).
 
-2. ``prepare`` — *runtime* conf hygiene applied to any externally-provided
-   session (the verify driver constructs its own ``SparkSession`` and hands
-   it to ``__spark_entry__``).  Everything set here must be a runtime-settable
-   SQL conf.  Most important is ``spark.sql.ansi.enabled=false``: the
+2. ``prepare`` — *runtime* conf hygiene, applied in two places only:
+   ``get_session``, and the wrapper ``plans.registry.register`` puts
+   around every query, which runs it on whatever session the query is
+   handed (the verify driver builds its own ``SparkSession`` and reaches
+   plan code only through the registry). Loaders and operators do not
+   apply it; code that calls them on a session from elsewhere calls
+   ``prepare`` first. Everything set here must be a runtime-settable SQL
+   conf. Most important is ``spark.sql.ansi.enabled=false``: the
    reference's scalar semantics are "NULL on failure, never error"
    (reference ``dags/global_dag.py:111-118`` — try/except-to-None date
    parsing), so the engine pins non-ANSI evaluation rather than relying on

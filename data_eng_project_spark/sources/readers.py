@@ -1,7 +1,7 @@
 """File readers (reference S6-S9, SURVEY.md §2.1).
 
-- ``read_csv``       : delimited scan with explicit schema and the
-                       reference's silent-drop-malformed posture
+- ``read_csv``       : delimited scan (explicit schema, or all strings)
+                       with the reference's silent-drop-malformed posture
                        (``error_bad_lines=False`` → DROPMALFORMED,
                        reference ``dags/global_dag.py:51-52,61-62``).
 - ``read_fixed_width``: fixed-width text → typed columns via
@@ -29,18 +29,12 @@ def read_csv(
     path: str,
     schema: StructType | str | None = None,
     sep: str = ",",
-    header: bool = True,
-    drop_malformed: bool = True,
 ) -> DataFrame:
-    reader = (
-        spark.read.option("sep", sep)
-        .option("header", header)
-        .option("mode", "DROPMALFORMED" if drop_malformed else "PERMISSIVE")
-    )
+    """Headered CSV scan that drops malformed rows. Without ``schema``
+    every column is read as a string (no inference pass over the file)."""
+    reader = spark.read.option("sep", sep).option("header", True).option("mode", "DROPMALFORMED")
     if schema is not None:
         reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", True)
     return reader.csv(path)
 
 

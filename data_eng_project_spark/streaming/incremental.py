@@ -51,11 +51,9 @@ def read_bounded_parquet_stream(
     single-file glob handling can never drift between them)."""
     import os
 
-    from data_eng_project_spark.session import prepare
+    from data_eng_project_spark.tables import read_parquet
 
-    prepare(spark)
-    raw_schema = spark.read.parquet(parquet_path).schema
-    reader = spark.readStream.schema(raw_schema)
+    reader = spark.readStream.schema(read_parquet(spark, parquet_path).schema)
     if os.path.isdir(parquet_path):
         # Spark-written directory table: stream the directory itself
         # (a pathGlobFilter on the directory NAME would match none of

@@ -14,6 +14,10 @@ memo keeps the inferred schema keyed by the identity of the data files
 directory) and by the parquet-inference confs, so a repeated read of
 unchanged files runs no job and a rewritten file is re-inferred.
 Non-local paths (nothing to ``stat``) are inferred on every read.
+
+Loaders apply no session confs: the session is expected to be prepared
+already (``session.get_session``, or the registry wrapper around every
+query), and the ``nanosAsLong`` conf decides how events ``ts`` arrives.
 """
 
 from __future__ import annotations
@@ -84,9 +88,6 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from data_eng_project_spark.session import prepare
-
-    prepare(spark)
     df = read_parquet(spark, table_path(sf_dir, name))
     if name == "events":
         # The generator has stored ts two ways across rounds:

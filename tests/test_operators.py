@@ -922,26 +922,26 @@ def test_unigram_lm_scores_quantile_mode(spark):
     assert rows[9].lm_keep is False  # token-less
 
 
-def test_release_dedup_caches_unpersists(spark, near_dup_docs):
-    """Jaccard operators persist shingle-set frames; release_dedup_caches
-    must drop every tracked cache (long-lived incremental sessions)."""
-    from data_eng_project_spark.operators.dedup import (
-        _PERSISTED,
-        ngram_jaccard_pairs_bipartite,
-        release_dedup_caches,
-    )
+def test_bipartite_jaccard_caches_released_by_clear_cache(spark, near_dup_docs):
+    """The bipartite Jaccard operator persists exactly three frames: the
+    corpus sets, the batch sets and the shared prefix (r12: persisted so
+    pa/pb stop re-running the union+freq+rank chain twice). The pair frame
+    holds no handle to them; spark.catalog.clearCache() must release them
+    (long-lived incremental sessions)."""
+    from data_eng_project_spark.operators.dedup import ngram_jaccard_pairs_bipartite
 
-    release_dedup_caches()  # clean slate from earlier tests in the session
+    def persistent_rdds():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    spark.catalog.clearCache()  # clean slate from earlier tests in the session
+    before = persistent_rdds()
     batch = near_dup_docs.filter(F.col("doc_id") >= 3)
     corpus = near_dup_docs.filter(F.col("doc_id") < 3)
     ngram_jaccard_pairs_bipartite(corpus, batch, "text", "doc_id").collect()
-    # corpus sets + batch sets + the shared prefix frame (r12: persisted
-    # so pa/pb stop re-running the union+freq+rank chain twice)
-    assert len(_PERSISTED) == 3
-    cached = list(_PERSISTED)
-    release_dedup_caches()
-    assert not _PERSISTED
-    assert all(d.storageLevel.useMemory is False for d in cached)
+    cached = persistent_rdds() - before
+    assert len(cached) == 3
+    spark.catalog.clearCache()
+    assert not cached & persistent_rdds()
 
 
 def test_decode_frame_png_stream():

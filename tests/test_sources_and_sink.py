@@ -312,6 +312,35 @@ def test_register_rejects_duplicate_names():
         register(name, oracle=None)(lambda spark, sf_dir: None)
 
 
+def test_registry_applies_session_hygiene(spark, sf_dir):
+    """Session hygiene lives at the registry boundary: building any
+    registered query puts confs a caller (or an earlier query) left
+    behind back at their prepared values."""
+    from data_eng_project_spark.plans.registry import REGISTRY
+    from data_eng_project_spark.session import default_parallelism
+
+    prepared = {
+        "spark.sql.ansi.enabled": "false",
+        "spark.sql.shuffle.partitions": str(default_parallelism()),
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+    }
+    dirty = {
+        "spark.sql.ansi.enabled": "true",
+        "spark.sql.shuffle.partitions": "200",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "256",
+    }
+    saved = {k: spark.conf.get(k) for k in dirty}
+    try:
+        for k, v in dirty.items():
+            spark.conf.set(k, v)
+        REGISTRY["flagship_site_density"].fn(spark, sf_dir)
+        assert {k: spark.conf.get(k) for k in prepared} == prepared
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert all(hasattr(spec.fn, "__wrapped__") for spec in REGISTRY.values())
+
+
 def test_run_available_now_leaves_no_temp_view(spark, tmp_path):
     """Regression: the memory-sink temp views (one unique name per run)
     must not accumulate in the catalog for the session lifetime."""

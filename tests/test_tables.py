@@ -52,6 +52,16 @@ def test_events_ts_is_timestamp_on_memo_hit(spark, sf_dir):
     assert events.select("ts").limit(1).collect()[0]["ts"] is not None
 
 
+def test_second_events_stream_open_runs_no_job(spark, sf_dir):
+    from data_eng_project_spark.streaming.incremental import read_events_stream
+    from data_eng_project_spark.tables import table_path
+
+    path = table_path(sf_dir, "events")
+    read_events_stream(spark, path)
+    _, n_jobs = _jobs(spark, lambda: read_events_stream(spark, path))
+    assert n_jobs == 0
+
+
 def test_rewritten_directory_table_is_reinferred(spark, tmp_path):
     path = str(tmp_path / "t.parquet")
     spark.range(3).write.parquet(path)
